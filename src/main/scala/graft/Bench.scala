@@ -130,10 +130,15 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = session(sfDir, cpus)
 
+    // a failed query reports -1 in the headline; its cause goes to stderr
+    def failed(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
+        e.getMessage)
+
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable => failed(name, e); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -149,9 +154,11 @@ object Bench {
       // own (which never executes) — build the same aggregate explicitly
       // and keep its handle. The action must be collect(): head() would
       // plan ANOTHER limit query and leave this one's metrics at zero.
-      val counted = try SparkEntry.queries(name)(spark, sfDir).groupBy().count()
-        catch { case _: Throwable => return (-1.0, 0.0, 0.0) }
-      try counted.collect() catch { case _: Throwable => return (-1.0, 0.0, 0.0) }
+      val counted = try {
+        val c = SparkEntry.queries(name)(spark, sfDir).groupBy().count()
+        c.collect()
+        c
+      } catch { case e: Throwable => failed(name, e); return (-1.0, 0.0, 0.0) }
       val sec = (System.nanoTime() - t0) / 1e9
       val nodes = planNodes(counted.queryExecution.executedPlan)
       def mb(key: String): Double = math.round(nodes
@@ -202,12 +209,7 @@ object Bench {
       // r5, q18/q19 in r4) are inter-SESSION variance, and the spread
       // separates scheduler/load noise (visible here) from plan changes.
       def measure(attempt: Int): QR = {
-        graft.operators.Broadcasts.reset()
-        graft.operators.ClusteredAgg.reset()
-        graft.operators.RuntimeFilters.reset()
-        graft.operators.LookupJoin.reset()
-        graft.operators.Similarity.resetRelationCache()
-        graft.sources.Tables.resetRelationCache()
+        graft.operators.SessionCache.reset()
         val cachedMb = memState()._1
         val (cold, shufMb, spillMb) = coldWithShuffle(name)
         val gc0 = gcMillis()

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.storage.StorageLevel
@@ -32,12 +31,10 @@ import org.apache.spark.util.SizeEstimator
   * executor recomputes its partitions instead of aborting the job — the
   * fault-tolerance posture a 1000-executor cluster requires — and blocks
   * spill rather than OOM. Decisions are cached per (session, canonical
-  * plan, gate): re-running the same query reuses the already-materialized
-  * side instead of checkpointing a fresh orphan copy each run. The cache
-  * is a bounded LRU that unpersists what it evicts, and [[reset]] drops
-  * everything — a long-lived session running many distinct queries can
-  * no longer accumulate pinned storage without bound, and a caller that
-  * regenerates source files in-session resets to drop stale frames.
+  * plan, gate) in [[SessionCache.Gates]]: re-running the same query
+  * reuses the already-materialized side instead of persisting a fresh
+  * orphan copy each run; the cache's bound and reset unpersist what they
+  * release (lifetime contract: [[SessionCache]]).
   */
 object Broadcasts {
 
@@ -104,37 +101,8 @@ object Broadcasts {
     math.max(256L << 20, heap / 16)
   }
 
-  private final case class Entry(result: DataFrame, materialized: DataFrame,
-      rows: Long, broadcasted: Boolean)
-
-  /** Decision LRU keyed by (session, canonicalized plan, gate) —
-    * structural plan equality (collision-proof, unlike a 32-bit hash),
-    * session-scoped so a frame never outlives or crosses its
-    * SparkSession, gate-scoped so the same plan gated at 64 MB and
-    * 512 MB cannot alias to one decision. Bounded: eviction unpersists
-    * the evicted side's storage.
-    */
-  private val MaxEntries = 64
-  private val decided =
-    new java.util.LinkedHashMap[(SparkSession, LogicalPlan, Long), Entry](
-        16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, LogicalPlan, Long), Entry]): Boolean =
-        if (size > MaxEntries) { e.getValue.materialized.unpersist(false); true }
-        else false
-    }
-
-  /** Drop every cached decision and unpersist its storage. Call between
-    * benchmark iterations for cold-cache timings, or after regenerating
-    * source files whose plans were gated in this session.
-    */
-  def reset(): Unit = decided.synchronized {
-    decided.values.forEach(e => e.materialized.unpersist(false))
-    decided.clear()
-  }
-
-  /** Number of live cached decisions (spec hook). */
-  def cachedCount: Int = decided.synchronized(decided.size)
+  private[operators] final case class Entry(result: DataFrame,
+      materialized: DataFrame, rows: Long, broadcasted: Boolean)
 
   /** A gated side with its measured stats: the frame to join against,
     * the materializing count (already paid), and whether the gate chose
@@ -158,18 +126,9 @@ object Broadcasts {
     val gate = if (maxBytes == UseSessionDefault)
       defaultMaxBytes(df.sparkSession) else maxBytes
     val key = (df.sparkSession, PlanBridge.analyzed(df).canonicalized, gate)
-    def stats(e: Entry) = Gated(e.result, e.rows, e.broadcasted,
-      e.materialized)
-    val hit = decided.synchronized(decided.get(key))
-    if (hit != null) return stats(hit)
-    // decide() runs Spark jobs — outside the lock. A concurrent racer may
-    // decide the same plan; the loser's copy is unpersisted, first wins.
-    val fresh = decide(df, gate, sampleRows)
-    decided.synchronized {
-      val race = decided.get(key)
-      if (race != null) { fresh.materialized.unpersist(false); stats(race) }
-      else { decided.put(key, fresh); stats(fresh) }
-    }
+    val e = SessionCache.getOrBuild(SessionCache.Gates, key)(
+      decide(df, gate, sampleRows))
+    Gated(e.result, e.rows, e.broadcasted, e.materialized)
   }
 
   private def decide(df: DataFrame, maxBytes: Long,

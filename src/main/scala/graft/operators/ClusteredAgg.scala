@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
@@ -46,23 +45,12 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object ClusteredAgg {
 
-  /** Layout verdicts keyed by the full canonicalized source plan —
-    * structural equality, so two different layouts can never share a
-    * verdict (a 32-bit hash key could collide and elide an exchange on a
-    * layout that was never measured). Valid within a session: scan
-    * splits are re-derived per plan from the same files + confs.
-    */
-  private val layoutVerdicts =
-    new java.util.concurrent.ConcurrentHashMap[LogicalPlan, java.lang.Boolean]()
-
-  /** Drop all cached layout verdicts (bench cold-run hook; also correct
-    * to call after rewriting files behind a measured layout in-session).
-    */
-  def reset(): Unit = layoutVerdicts.clear()
-
   /** Is every key of `df(keyCol)` confined to a single scan partition,
-    * with no NULLs? Exact, not a range heuristic. (cached; safe to call
-    * repeatedly)
+    * with no NULLs? Exact, not a range heuristic. Cached in
+    * [[SessionCache.Verdicts]] by the full canonicalized key plan —
+    * structural equality, so two layouts never share a verdict, and no
+    * session, so a fresh session over the same files reuses it. Safe to
+    * call repeatedly.
     *
     * Two tiers: [[LayoutStats.footerProvenClustered]] first — a
     * metadata-only proof from parquet row-group min/max stats, zero
@@ -76,8 +64,8 @@ object ClusteredAgg {
     */
   def isKeyClustered(df: DataFrame, keyCol: String): Boolean = {
     val keyed = df.select(col(keyCol).as("k"))
-    val cacheKey = PlanBridge.analyzed(keyed).canonicalized
-    layoutVerdicts.computeIfAbsent(cacheKey, _ =>
+    SessionCache.getOrBuild(SessionCache.Verdicts,
+        PlanBridge.analyzed(keyed).canonicalized)(
       java.lang.Boolean.valueOf(
         LayoutStats.footerProvenClustered(df, keyCol) || scanVerdict(keyed)))
   }

@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -46,23 +45,9 @@ import graft.expressions.{LongLookupTable, LongMapLookup, StringPoolLookup}
   * [[RuntimeFilters.shuffleGuard]]) past the pin budget, so nothing
   * unboundedly-growing is ever collected to the driver.
   *
-  * Cache-lifetime contract (spec-gated, LookupJoinSpec):
-  *
-  *   - IMMUTABLE SIDES. The cache keys on the side's canonicalized
-  *     PLAN, not its file contents — a dimension whose underlying files
-  *     are rewritten in-session serves the table built from the OLD
-  *     files until [[reset]] (the same posture [[Broadcasts]] documents
-  *     for its gated decisions). Rewriting a gated dim mid-session is a
-  *     CDC/RetractableView workload; batch-analytics dims are
-  *     snapshot-immutable, and pipelines that do regenerate files call
-  *     reset() after.
-  *   - EVICTION IS NON-DESTRUCTIVE. A full LRU unpersists the evicted
-  *     table's executor copies instead of destroying the broadcast: a
-  *     concurrently RUNNING query that still probes it re-fetches
-  *     lazily (slower, never wrong), and the final destroy happens via
-  *     Spark's ContextCleaner once no plan references the handle.
-  *     [[reset]] — the cold-bench / regenerated-files hook — DOES
-  *     destroy, and is documented for quiesced sessions only.
+  * Tables are cached in [[SessionCache.Lookups]] (bound 8): eviction
+  * unpersists a table's executor copies, reset destroys them — the
+  * lifetime contract is [[SessionCache]]'s.
   */
 object LookupJoin {
 
@@ -80,43 +65,15 @@ object LookupJoin {
     */
   final case class LookupSide(table: Broadcast[LongLookupTable],
       pools: Array[Broadcast[Array[UTF8String]]]) {
-    private[LookupJoin] def destroy(): Unit = {
+    private[operators] def destroy(): Unit = {
       table.destroy()
       pools.foreach(p => if (p != null) p.destroy())
     }
-    private[LookupJoin] def unpersist(): Unit = {
+    private[operators] def unpersist(): Unit = {
       table.unpersist(/* blocking = */ false)
       pools.foreach(p => if (p != null) p.unpersist(/* blocking = */ false))
     }
   }
-
-  private val MaxEntries = 8
-  private val built =
-    new java.util.LinkedHashMap[(SparkSession, LogicalPlan, String),
-        LookupSide](16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, LogicalPlan, String),
-            LookupSide]): Boolean =
-        if (size > MaxEntries) {
-          // unpersist, not destroy: a running query probing the evicted
-          // table re-fetches it; ContextCleaner destroys it after the
-          // last plan reference drops (cache-lifetime contract above)
-          e.getValue.unpersist(); true
-        } else false
-    }
-
-  /** Drop every cached table and DESTROY its broadcast (cold-bench
-    * hook, mirrors [[Broadcasts.reset]]; also the invalidation hook
-    * after regenerating a side's files). Call on a quiesced session —
-    * a query mid-flight on a destroyed table fails.
-    */
-  def reset(): Unit = built.synchronized {
-    built.values.forEach(_.destroy())
-    built.clear()
-  }
-
-  /** Number of live cached tables (spec hook). */
-  def cachedCount: Int = built.synchronized(built.size)
 
   /** `fact` inner-lookup-joined against `side`: the result is `fact`
     * plus `as` = the side payload for the matching unique `sideKey`,
@@ -170,20 +127,14 @@ object LookupJoin {
       PlanBridge.expression(factKey.cast(LongType)), bc.table, 0)).isNotNull)
   }
 
-  private def tableFor(side: DataFrame, sideKey: String,
+  private[graft] def tableFor(side: DataFrame, sideKey: String,
       payloads: Seq[String]): LookupSide = {
     val key = (side.sparkSession, PlanBridge.analyzed(side).canonicalized,
       s"$sideKey->${payloads.mkString(",")}")
-    val hit = built.synchronized(built.get(key))
-    if (hit != null) return hit
-    // build outside the lock — one collect over the (typically already
+    // built outside the lock — one collect over the (typically already
     // materialized) side, once per session
-    val fresh = build(side, sideKey, payloads)
-    built.synchronized {
-      val race = built.get(key)
-      if (race != null) { fresh.destroy(); race }
-      else { built.put(key, fresh); fresh }
-    }
+    SessionCache.getOrBuild(SessionCache.Lookups, key)(
+      build(side, sideKey, payloads))
   }
 
   private def build(side: DataFrame, sideKey: String,

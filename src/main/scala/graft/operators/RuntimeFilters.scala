@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.LongType
@@ -34,9 +33,9 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale posture: the Bloom is built once per (session, build-side plan)
   * from the ALREADY-MATERIALIZED gated side (one cheap pass over the
-  * cache), cached in a bounded LRU, and embedded in the fact filter as a
-  * binary literal — shipped with the task binary exactly like the
-  * optimizer's own injected filters. When the key set outgrows
+  * cache), cached in [[SessionCache.Sketches]], and embedded in the fact
+  * filter as a binary literal — shipped with the task binary exactly
+  * like the optimizer's own injected filters. When the key set outgrows
   * [[RuntimeFilters.MaxKeys]] the filter is SKIPPED, not shrunk: a
   * saturated Bloom filters nothing and taxes every row, so past the
   * budget the plan simply stays the gated shuffle join — the same
@@ -81,60 +80,25 @@ object RuntimeFilters {
     */
   val Fpp: Double = 0.05
 
-  /** Built blooms keyed by (session, canonicalized build plan, key col):
-    * the gated side's plan is stable across warm re-runs, so the build
-    * pass is paid once per session, like the gated-broadcast decision it
-    * rides on. Over-budget sides are not cached — the guard there is a
-    * single long compare against the row count the caller already
-    * measured. Bounded: a full cache holds ≤ 8 sketches of ≤ ~75 MB;
-    * eviction just drops bytes (the sketch is an embedded literal, no
-    * cluster-side state to free).
-    *
-    * IMMUTABLE-SIDE contract (spec-gated, RuntimeFiltersSpec): the key
-    * is the side's canonicalized plan, not its file contents. A side
-    * whose files are rewritten in-session keeps serving the OLD sketch
-    * until [[reset]] — and unlike a stale broadcast decision, a stale
-    * Bloom is a CORRECTNESS hazard here: keys ADDED to the side after
-    * the build would have their fact rows dropped before the shuffle.
-    * Same posture as [[Broadcasts]]/[[LookupJoin]]: sides are
-    * session-immutable snapshots; regenerate files → reset().
-    */
-  private val MaxEntries = 8
-  private val built =
-    new java.util.LinkedHashMap[(SparkSession, LogicalPlan, String),
-        Array[Byte]](16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, LogicalPlan, String),
-            Array[Byte]]): Boolean = size > MaxEntries
-    }
-
-  /** Drop every cached sketch (cold-bench hook, mirrors
-    * [[Broadcasts.reset]]).
-    */
-  def reset(): Unit = built.synchronized(built.clear())
-
-  /** Number of live cached sketches (spec hook). */
-  def cachedCount: Int = built.synchronized(built.size)
-
   /** `fact` filtered to rows whose `factKey` might be in `side`'s
     * `sideKey` set — or `fact` unchanged when the side is over budget.
     * `sideRows` is the side's measured row count (the gated
     * materialization already has it — [[Broadcasts.gatedStats]]).
+    *
+    * Built sketches are cached in [[SessionCache.Sketches]], so the build
+    * pass is paid once per session like the gated decision it rides on.
+    * Over-budget sides are not cached: the guard there is one compare
+    * against the row count the caller already measured. A stale sketch
+    * can drop rows — see the immutable-side rule in [[SessionCache]].
     */
   def keyFilter(fact: DataFrame, factKey: String, side: DataFrame,
       sideKey: String, sideRows: Long, fpp: Double = Fpp): DataFrame = {
     if (sideRows <= 0 || sideRows > MaxKeys) return fact
     val key = (side.sparkSession, PlanBridge.analyzed(side).canonicalized,
       s"$sideKey@$fpp")
-    val hit = built.synchronized(built.get(key))
-    val sketch = if (hit != null) hit else {
-      // one pass over the (already materialized) side — outside the lock
-      val fresh = serialize(side, sideKey, sideRows, fpp)
-      built.synchronized {
-        val race = built.get(key)
-        if (race != null) race else { built.put(key, fresh); fresh }
-      }
-    }
+    // one pass over the (already materialized) side — outside the lock
+    val sketch = SessionCache.getOrBuild(SessionCache.Sketches, key)(
+      serialize(side, sideKey, sideRows, fpp))
     fact.filter(mightContain(sketch, col(factKey)))
   }
 

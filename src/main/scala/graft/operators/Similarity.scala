@@ -88,13 +88,9 @@ object Similarity {
   def ensureLshBucketLayout(emb: => DataFrame, vecCol: String,
       srcDir: String, nbits: Int = 4, dim: Int = 64,
       seed: Long = 42L): String = {
-    def fp(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(fp).foldLeft(0L)(_ ^ _)).getOrElse(0L)
-      else f.length ^ java.lang.Long.rotateLeft(f.lastModified, 21)
     val src = new java.io.File(srcDir, "embeddings.parquet")
-    val key = java.lang.Long.toHexString(
-      fp(src) ^ src.getAbsolutePath.hashCode.toLong ^ (nbits.toLong << 32) ^ seed)
+    val key = java.lang.Long.toHexString(graft.sources.Tables.fingerprint(src) ^
+      src.getAbsolutePath.hashCode.toLong ^ (nbits.toLong << 32) ^ seed)
     val path = s"${sys.props("java.io.tmpdir")}/graft_lsh_layout_$key"
     if (!new java.io.File(path, "_SUCCESS").exists()) {
       val planes = hyperplanes(dim, nbits, seed)
@@ -112,26 +108,16 @@ object Similarity {
 
   /** The layout at `path` as a DataFrame whose RESOLVED relation (file
     * listing, partition discovery, parquet footer schema) is built once
-    * per (session, path) and reused across executions — the LookupJoin
-    * cache posture applied to the scan side. Per-execution
+    * per (session, path, content) and reused across executions
+    * ([[graft.sources.Tables.relation]]). Per-execution
     * `spark.read.parquet(path)` re-derives the partition spec and
     * re-reads a footer on the driver every run, a fixed driver-side cost
     * that at the 1000× replica is pure scheduling-floor tax on a probe
-    * that reads 5 buckets (measured: PROFILE ss1b_parts, r17). Safe
-    * because layout paths are CONTENT-KEYED ([[ensureLshBucketLayout]]'s
-    * fingerprint): a changed corpus gets a new path, so a cached entry
-    * can never serve stale files. [[resetRelationCache]] is the
-    * cold-bench hook, mirroring [[graft.operators.LookupJoin.reset]].
+    * that reads 5 buckets (measured: PROFILE ss1b_parts, r17).
     */
   def layoutRelation(s: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    relationCache.computeIfAbsent((s, path), _ => s.read.parquet(path))
-
-  private val relationCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  /** Drop every cached layout relation (cold-bench / relayout hook). */
-  def resetRelationCache(): Unit = relationCache.clear()
+    graft.sources.Tables.relation(s, path)(s.read.parquet(path))
 
   /** The pruned candidate set [[lshTopK]] scores: rows of `df` whose
     * LSH bucket is within `probeHamming` bit flips of the query's.

@@ -104,8 +104,8 @@ object ScanOps {
   }
 
   /** fp1 stretch depth: enough per-row work that core count is visible
-    * over the per-query floor at bench scale (~1.5k MINSTD rounds ≈ a
-    * few µs/row), small enough that the query stays a sub-second suite
+    * over the per-query floor at bench scale (6000 MINSTD rounds per
+    * row), small enough that the query stays a sub-second suite
     * member at full cores. MINSTD (Park-Miller, x→x·48271 mod 2³¹−1)
     * because the iterate is exact in 64-bit integers (product < 2⁴⁷)
     * and, being linear, has the closed form x_K = x₀·48271^K mod M the

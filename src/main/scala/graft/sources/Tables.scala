@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.SessionCache
+
 /** Parquet table loaders for the driver-generated star schema
   * (`/root/repo/TESTDATA.md`). At 100 TB these would be partitioned
   * directories; the API stays the same — `spark.read.parquet` over a
@@ -14,20 +16,8 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Resolved relations are cached per (session, path, content
-    // fingerprint): re-resolving a parquet relation costs a driver-side
-    // partition-discovery pass + footer schema read PER EXECUTION
-    // (~55 ms/table at sf0.1 — ss1b_parts, r17), which for a suite that
-    // rebuilds its frames every run is a fixed per-query tax DuckDB's
-    // per-session table bind never pays. The fingerprint (file length ^
-    // rotated mtime, XOR-folded — same scheme as the derived-layout
-    // signature below) keys the CONTENT, so a table rewritten in-session
-    // resolves fresh on its next load; an unchanged table costs one
-    // directory stat walk. The data itself is re-read from parquet by
-    // every job — this caches the resolution, never results.
     val path = s"$dir/$name.parquet"
-    val key = (spark, path, fingerprint(new java.io.File(path)))
-    relations.computeIfAbsent(key, _ =>
+    relation(spark, path)(
       // events: the producer decides the `ts` physical unit (the harness
       // has shipped both TIMESTAMP(NANOS) and TIMESTAMP(MICROS) layouts
       // of the same table) — sniff the footer and adapt instead of
@@ -36,20 +26,29 @@ object Tables {
       else spark.read.parquet(path))
   }
 
-  private def fingerprint(f: java.io.File): Long =
+  /** `read`'s resolved relation for `path`, cached per (session, path,
+    * content fingerprint) in [[SessionCache.Relations]]. Re-resolving a
+    * parquet relation costs a driver-side partition-discovery pass +
+    * footer schema read PER EXECUTION (~55 ms/table at sf0.1 —
+    * ss1b_parts, r17), which for a suite that rebuilds its frames every
+    * run is a fixed per-query tax DuckDB's per-session table bind never
+    * pays. The fingerprint (file length ^ rotated mtime, XOR-folded) keys
+    * the CONTENT, so a path rewritten in-session resolves fresh on its
+    * next use; an unchanged one costs one directory stat walk. The data
+    * itself is re-read from parquet by every job — this caches the
+    * resolution, never results.
+    */
+  private[graft] def relation(spark: SparkSession, path: String)(
+      read: => DataFrame): DataFrame =
+    SessionCache.getOrBuild(SessionCache.Relations,
+      (spark, path, fingerprint(new java.io.File(path))))(read)
+
+  /** XOR-folded (length ^ rotated mtime) over every file under `f`. */
+  private[graft] def fingerprint(f: java.io.File): Long =
     if (f.isDirectory)
       Option(f.listFiles()).map(_.map(fingerprint).foldLeft(0L)(_ ^ _))
         .getOrElse(0L)
     else f.length ^ java.lang.Long.rotateLeft(f.lastModified, 21)
-
-  private val relations = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
-  /** Drop every cached relation (cold-bench hook — mirrors the other
-    * session decision caches; content changes invalidate WITHOUT this,
-    * via the fingerprint key).
-    */
-  def resetRelationCache(): Unit = relations.clear()
 
   /** The `documents` table re-laid-out as a hive-partitioned dataset
     * (`.../lang=en/...`), the 100 TB read posture: a filter on `lang`
@@ -128,8 +127,6 @@ object Tables {
     // same fingerprint-keyed relation reuse as load(): a rebuilt copy
     // (new content under the same path) resolves fresh, an unchanged one
     // skips the per-execution partition-discovery + footer pass
-    relations.computeIfAbsent(
-      (spark, out.toString, fingerprint(out)),
-      _ => spark.read.parquet(out.toString))
+    relation(spark, out.toString)(spark.read.parquet(out.toString))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Broadcasts
+import graft.operators.{Broadcasts, SessionCache}
 
 /** The broadcast decision cache must be bounded: the r6 verdict found it
   * pinned a MEMORY_AND_DISK copy per distinct gated plan for process
@@ -11,7 +11,7 @@ import graft.operators.Broadcasts
 class BroadcastsSpec extends SparkSpec {
 
   test("cache is bounded; eviction and reset unpersist storage") {
-    Broadcasts.reset()
+    SessionCache.reset()
     val base = spark.sparkContext.getPersistentRDDs.size
     // more distinct plans than the LRU holds (64): storage must plateau,
     // not grow monotonically with every new gated plan
@@ -20,11 +20,12 @@ class BroadcastsSpec extends SparkSpec {
         .select((col("id") + lit(i * 10000)).as("k"))
       Broadcasts.gated(df).count()
     }
-    assert(Broadcasts.cachedCount <= 64, s"LRU overgrew: ${Broadcasts.cachedCount}")
+    assert(SessionCache.count(SessionCache.Gates) <= 64,
+      s"LRU overgrew: ${SessionCache.count(SessionCache.Gates)}")
     val held = spark.sparkContext.getPersistentRDDs.size - base
     assert(held <= 64, s"evicted entries left $held persisted RDDs pinned")
-    Broadcasts.reset()
-    assert(Broadcasts.cachedCount == 0)
+    SessionCache.reset()
+    assert(SessionCache.count(SessionCache.Gates) == 0)
     assert(spark.sparkContext.getPersistentRDDs.size <= base,
       "reset() left persisted storage behind")
   }
@@ -32,17 +33,18 @@ class BroadcastsSpec extends SparkSpec {
   test("same plan under a different gate is a distinct decision") {
     // r6 advice: the key omitted maxBytes, so the same plan gated at
     // 1 byte and at the default silently aliased to whichever ran first
-    Broadcasts.reset()
+    SessionCache.reset()
     def side = spark.range(0, 50000)
       .select(col("id").as("k"), col("id").cast("string").as("s"))
     val strict = Broadcasts.gated(side, maxBytes = 1L)
     val default = Broadcasts.gated(side)
-    assert(Broadcasts.cachedCount == 2, "gates aliased to one cache entry")
+    assert(SessionCache.count(SessionCache.Gates) == 2,
+      "gates aliased to one cache entry")
     assert(!strict.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "a 1-byte gate must refuse the broadcast")
     assert(default.queryExecution.analyzed.toString.contains("ResolvedHint"),
       "a 600 KB side must pass the default gate")
-    Broadcasts.reset()
+    SessionCache.reset()
   }
 
   test("pin budget derives from spark.executor.memory when configured, " +
@@ -65,7 +67,7 @@ class BroadcastsSpec extends SparkSpec {
   }
 
   test("gatedStats returns the measured cardinality and the verdict") {
-    Broadcasts.reset()
+    SessionCache.reset()
     val side = spark.range(0, 12345).select(col("id").as("k"))
     val g = Broadcasts.gatedStats(side)
     assert(g.rows === 12345L && g.broadcasted)
@@ -74,6 +76,6 @@ class BroadcastsSpec extends SparkSpec {
     assert(Broadcasts.gatedStats(side).rows === 12345L)
     // a refused gate reports broadcasted = false
     assert(!Broadcasts.gatedStats(side, maxBytes = 0L).broadcasted)
-    Broadcasts.reset()
+    SessionCache.reset()
   }
 }

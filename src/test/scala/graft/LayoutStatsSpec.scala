@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.operators.{ClusteredAgg, LayoutStats}
+import graft.operators.{ClusteredAgg, LayoutStats, SessionCache}
 
 /** The footer-statistics clustering proof: proves sorted layouts with
   * ZERO Spark jobs, answers only proven/unknown (never "not clustered"),
@@ -148,7 +148,7 @@ class LayoutStatsSpec extends SparkSpec {
   }
 
   test("groupByClustered over a footer-proven layout: exchange-free and exact") {
-    ClusteredAgg.reset()
+    SessionCache.reset()
     val df = spark.read.parquet(sortedPath)
     val fast = ClusteredAgg.groupByClustered(df, "k",
       Seq(sum("v").as("s"), count(lit(1)).as("c")))

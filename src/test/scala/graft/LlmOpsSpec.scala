@@ -99,6 +99,19 @@ class LlmOpsSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  test("minHashBands accepts column names with a dot in them") {
+    // the small-input fan-out hashes every column by name: an unquoted
+    // "doc.id" resolves as field `id` of a struct `doc` and fails analysis
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    val fixture = Seq((1L, text), (2L, text)).toDF("doc.id", "body.text")
+    val bands = Dedup.minHashBands(fixture, "doc.id", "body.text").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    assert(bands.length === 2 * 32)
+    val byDoc = bands.groupBy(_._1).map { case (id, bs) =>
+      id -> bs.map(b => b._2 -> b._3).toMap }
+    assert(byDoc(1L) === byDoc(2L), "identical texts got different bands")
+  }
+
   test("dropNearDuplicates keeps one representative per cluster") {
     val base = "spark shuffles partition data across executors while catalyst " +
       "optimizes logical plans into efficient physical operators for scans " +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.expressions.LongLookupTable
-import graft.operators.LookupJoin
+import graft.operators.{LookupJoin, SessionCache}
 
 /** The map-side lookup join must be EXACTLY the inner equi-join it
   * replaces (unique-key dimension, one payload attribute), build its
@@ -13,7 +13,7 @@ class LookupJoinSpec extends SparkSpec {
   import spark.implicits._
 
   test("lookup inner == join inner, incl. misses and NULL fact keys") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val side = Seq((10L, 1L), (20L, 2L), (30L, 3L),
       (Long.MinValue, 9L)).toDF("k", "p") // sentinel-valued real key
     val fact = Seq(Some(10L), Some(20L), Some(99L), None,
@@ -24,24 +24,25 @@ class LookupJoinSpec extends SparkSpec {
       .select("fk", "p").collect().map(_.toSeq).toSet
     assert(got === want)
     assert(got === Set(Seq(10L, 1L), Seq(20L, 2L), Seq(Long.MinValue, 9L)))
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("one table per (session, side plan); reset frees it") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val side = spark.range(0, 1000).select(col("id").as("k"),
       (col("id") % 7).as("p"))
     val fact = spark.range(0, 5000).select(col("id").as("fk"))
     LookupJoin.inner(fact, col("fk"), side, "k", "p", "p").count()
-    assert(LookupJoin.cachedCount === 1)
+    assert(SessionCache.count(SessionCache.Lookups) === 1)
     LookupJoin.inner(fact, col("fk"), side, "k", "p", "p").count()
-    assert(LookupJoin.cachedCount === 1, "same side plan rebuilt the table")
-    LookupJoin.reset()
-    assert(LookupJoin.cachedCount === 0)
+    assert(SessionCache.count(SessionCache.Lookups) === 1,
+      "same side plan rebuilt the table")
+    SessionCache.reset()
+    assert(SessionCache.count(SessionCache.Lookups) === 0)
   }
 
   test("duplicate side keys and NULL payloads are refused loudly") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val dup = Seq((1L, 1L), (1L, 2L)).toDF("k", "p")
     val fact = Seq(1L).toDF("fk")
     assertThrows[GraftInvalidOperation] {
@@ -53,12 +54,12 @@ class LookupJoinSpec extends SparkSpec {
       LookupJoin.inner(fact, col("fk"), nullPay, "k", "p", "p").count()
     }
     // NULL side KEYS are merely skipped — an inner join drops them too
-    LookupJoin.reset()
+    SessionCache.reset()
     val nullKey = Seq((Some(1L), 5L), (Option.empty[Long], 6L))
       .toDF("k", "p")
     assert(LookupJoin.inner(fact, col("fk"), nullKey, "k", "p", "p")
       .collect().map(_.toSeq).toSet === Set(Seq(1L, 5L)))
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("table handles collisions, the empty-slot sentinel, and stays " +
@@ -80,7 +81,7 @@ class LookupJoinSpec extends SparkSpec {
 
   test("LRU eviction unpersists, never destroys — a frame built before " +
       "the eviction still answers exactly") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val fact = spark.range(0, 100).select(col("id").as("fk"))
     def side(m: Int) = spark.range(0, 50).select(col("id").as("k"),
       (col("id") * m).as("p"))
@@ -91,16 +92,17 @@ class LookupJoinSpec extends SparkSpec {
     (2 to 10).foreach { m =>
       LookupJoin.inner(fact, col("fk"), side(m), "k", "p", "p").count()
     }
-    assert(LookupJoin.cachedCount === 8, "LRU exceeded its bound")
+    assert(SessionCache.count(SessionCache.Lookups) === 8,
+      "LRU exceeded its bound")
     // evicted = unpersisted only: the probe re-fetches the table and the
     // in-flight frame stays exact (destroy() here would fail its tasks)
     assert(early.filter(col("p") === col("fk")).count() === 50)
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("immutable-side contract: a side whose files are rewritten " +
       "in-session serves the OLD table until reset()") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-lookup-stale").toString
     spark.range(0, 10).select(col("id").as("k"), lit(1L).as("p"))
@@ -118,13 +120,13 @@ class LookupJoinSpec extends SparkSpec {
     // invalidation hook — the contract under test
     assert(total() === 10L,
       "rewritten side escaped the session cache without reset()")
-    LookupJoin.reset()
+    SessionCache.reset()
     assert(total() === 20L, "reset() did not invalidate the stale table")
   }
 
   test("arity-2 lookup inner == join inner: both attributes attach " +
       "from one table, misses and NULL fact keys drop") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val side = Seq((10L, 1L, 100L), (20L, 2L, 200L),
       (Long.MinValue, 9L, 900L)).toDF("k", "p", "q")
     val fact = Seq(Some(10L), Some(20L), Some(99L), None,
@@ -139,18 +141,18 @@ class LookupJoinSpec extends SparkSpec {
       Seq(Long.MinValue, 9L, 900L)))
     // ONE cached table serves the pair — and the semi (existence-only)
     // form reuses it rather than building an arity-1 sibling
-    assert(LookupJoin.cachedCount === 1)
+    assert(SessionCache.count(SessionCache.Lookups) === 1)
     assert(LookupJoin.semi(fact, col("fk"), side, "k", Seq("p", "q"))
       .collect().map(_.getLong(0)).toSet ===
       Set(10L, 20L, Long.MinValue))
-    assert(LookupJoin.cachedCount === 1,
+    assert(SessionCache.count(SessionCache.Lookups) === 1,
       "semi built a second table for the same (side, payloads)")
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("arity-2 refusal semantics match arity-1: duplicate keys and a " +
       "NULL in EITHER payload field throw") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val fact = Seq(1L).toDF("fk")
     val dup = Seq((1L, 1L, 1L), (1L, 2L, 2L)).toDF("k", "p", "q")
     assertThrows[GraftInvalidOperation] {
@@ -163,7 +165,7 @@ class LookupJoinSpec extends SparkSpec {
       LookupJoin.inner(fact, col("fk"), nullSecond, "k",
         Seq("p" -> "p", "q" -> "q")).count()
     }
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("multi-payload table stays exact across a dense key range " +
@@ -191,8 +193,8 @@ class LookupJoinSpec extends SparkSpec {
 
   test("q3b's broadcast path: one arity-2 table, graft_lookup in the " +
       "plan, result equals the plain three-way join") {
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
     val df = SparkEntry.queries("q3b_priority_detail")(spark, sf)
     assert(df.queryExecution.optimizedPlan.toString.contains("graft_lookup"),
       "q3b lost its lookup-join fast path")
@@ -214,15 +216,15 @@ class LookupJoinSpec extends SparkSpec {
     assert(df.collect().map(_.toSeq).toSeq ===
       want.collect().map(_.toSeq).toSeq)
     // the semi probe and the top-10 attachment share one cached table
-    assert(LookupJoin.cachedCount === 1,
+    assert(SessionCache.count(SessionCache.Lookups) === 1,
       "q3b built more than one table for the oc side")
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
   }
 
   test("string payloads: dictionary-encoded lookup == join inner, " +
       "shared strings share one pool code, misses drop") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val side = Seq((10L, "alice", 1L), (20L, "bob", 2L),
       (30L, "alice", 3L), (Long.MinValue, "carol", 9L))
       .toDF("k", "name", "p")
@@ -238,17 +240,17 @@ class LookupJoinSpec extends SparkSpec {
       Seq(30L, "alice", 3L), Seq(Long.MinValue, "carol", 9L)))
     // the attached column is a real string, and the existence-only semi
     // reuses the same cached table (field-0 probes the code, no decode)
-    assert(LookupJoin.cachedCount === 1)
+    assert(SessionCache.count(SessionCache.Lookups) === 1)
     assert(LookupJoin.semi(fact, col("fk"), side, "k", Seq("name", "p"))
       .collect().map(_.getLong(0)).toSet ===
       Set(10L, 20L, 30L, Long.MinValue))
-    assert(LookupJoin.cachedCount === 1,
+    assert(SessionCache.count(SessionCache.Lookups) === 1,
       "semi built a second table for the string-payload side")
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("string payloads: NULL strings are refused like NULL longs") {
-    LookupJoin.reset()
+    SessionCache.reset()
     val fact = Seq(1L).toDF("fk")
     val nullStr = Seq((1L, Some("x")), (2L, Option.empty[String]))
       .toDF("k", "name")
@@ -256,13 +258,13 @@ class LookupJoinSpec extends SparkSpec {
       LookupJoin.inner(fact, col("fk"), nullStr, "k", "name", "name")
         .count()
     }
-    LookupJoin.reset()
+    SessionCache.reset()
   }
 
   test("q10's broadcast path: both sides probe cached lookup tables, " +
       "strings decode post-top-20, result equals the plain join") {
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
     val df = SparkEntry.queries("q10_returned_items")(spark, sf)
     val plan = df.queryExecution.optimizedPlan.toString
     assert(plan.contains("graft_lookup"),
@@ -290,28 +292,28 @@ class LookupJoinSpec extends SparkSpec {
       want.collect().map(_.toSeq).toSeq)
     // orders table + customer-dim table, each built once: the custkey
     // semi probe and the top-20 string attachment share the dim table
-    assert(LookupJoin.cachedCount === 2,
+    assert(SessionCache.count(SessionCache.Lookups) === 2,
       "q10 built more than its two side tables")
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
   }
 
   test("q5's broadcast path carries the codegen'd lookup, not a " +
       "per-run-rebuilt hash relation") {
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
     val plan = SparkEntry.queries("q5_local_supplier")(spark, sf)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("graft_lookup"),
       "q5 lost its lookup-join fast path")
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
   }
 
   test("q3's broadcast path carries the codegen'd lookup and " +
       "round-trips the TIMESTAMP_NTZ payload exactly") {
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
     val df = SparkEntry.queries("q3_shipping_priority")(spark, sf)
     assert(df.queryExecution.optimizedPlan.toString.contains("graft_lookup"),
       "q3 lost its lookup-join fast path")
@@ -334,7 +336,7 @@ class LookupJoinSpec extends SparkSpec {
       .limit(10)
     assert(df.collect().map(_.toSeq).toSeq ===
       want.collect().map(_.toSeq).toSeq)
-    graft.operators.Broadcasts.reset()
-    LookupJoin.reset()
+    graft.operators.SessionCache.reset()
+    SessionCache.reset()
   }
 }

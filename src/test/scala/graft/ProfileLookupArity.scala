@@ -109,10 +109,7 @@ object ProfileLookupArity {
       "arity2_lookup" -> (() => arity2(spark, dir)),
       "packed_x2" -> (() => packedX2(spark, dir)),
       "bhj" -> (() => bhj(spark, dir)))
-    def resetCaches(): Unit = {
-      graft.operators.Broadcasts.reset()
-      graft.operators.LookupJoin.reset()
-    }
+    def resetCaches(): Unit = graft.operators.SessionCache.reset()
     // results must agree before any timing is worth recording
     val rows = variants.map { case (n, f) =>
       n -> f().collect().map(_.toSeq).toSeq

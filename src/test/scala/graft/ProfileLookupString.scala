@@ -93,10 +93,7 @@ object ProfileLookupString {
     val variants: Seq[(String, () => DataFrame)] = Seq(
       "lookup_string" -> (() => lookupString(spark, dir)),
       "bhj" -> (() => bhj(spark, dir)))
-    def resetCaches(): Unit = {
-      graft.operators.Broadcasts.reset()
-      graft.operators.LookupJoin.reset()
-    }
+    def resetCaches(): Unit = graft.operators.SessionCache.reset()
     // results must agree before any timing is worth recording
     val rows = variants.map { case (n, f) =>
       n -> f().collect().map(_.toSeq).toSeq

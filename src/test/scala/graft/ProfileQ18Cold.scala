@@ -19,8 +19,7 @@ object ProfileQ18Cold {
       println(f"[q18cold] $name%-30s ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
-    graft.operators.Broadcasts.reset()
-    graft.operators.ClusteredAgg.reset()
+    graft.operators.SessionCache.reset()
 
     val l = Tables.load(spark, dir, "lineitem").select("l_orderkey", "l_quantity")
     val bigRaw = graft.operators.ClusteredAgg.groupByClustered(l, "l_orderkey",
@@ -46,8 +45,7 @@ object ProfileQ18Cold {
       o.join(broadcast(top), o("o_orderkey") === top("l_orderkey")).count()
     }
     t("cold_full_query") {
-      graft.operators.Broadcasts.reset()
-      graft.operators.ClusteredAgg.reset()
+      graft.operators.SessionCache.reset()
       SparkEntry.queries("q18_big_orders")(spark, dir).count()
     }
     (1 to 3).foreach { i =>

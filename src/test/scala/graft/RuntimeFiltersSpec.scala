@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Broadcasts, RuntimeFilters}
+import graft.operators.{Broadcasts, RuntimeFilters, SessionCache}
 
 /** The hand-pushed runtime Bloom filter (q3/q5's fact-side pre-probe)
   * must be SEMANTICALLY INVISIBLE — it may only pass extra rows the
@@ -13,7 +13,7 @@ class RuntimeFiltersSpec extends SparkSpec {
   import spark.implicits._
 
   test("no true key ever filtered; join through the filter is exact") {
-    RuntimeFilters.reset()
+    SessionCache.reset()
     val side = spark.range(0, 5000).filter(col("id") % 7 === 0)
       .select(col("id").as("k"))
     val fact = spark.range(0, 5000)
@@ -34,51 +34,51 @@ class RuntimeFiltersSpec extends SparkSpec {
     // well under a third of the fact rows
     assert(filtered.count() < fact.count() / 3,
       s"sketch filtered nothing: ${filtered.count()} of ${fact.count()}")
-    RuntimeFilters.reset()
+    SessionCache.reset()
   }
 
   test("NULL fact keys drop (inner-join semantics preserved)") {
-    RuntimeFilters.reset()
+    SessionCache.reset()
     val side = Seq(1L, 2L).toDF("k")
     val fact = Seq(Some(1L), None, Some(9L)).toDF("fk")
     val filtered = RuntimeFilters.keyFilter(fact, "fk", side, "k", 2L)
     assert(filtered.collect().map(_.getLong(0)).toSet === Set(1L))
-    RuntimeFilters.reset()
+    SessionCache.reset()
   }
 
   test("one build per (session, side plan): warm re-runs reuse the " +
       "sketch; reset drops it") {
-    RuntimeFilters.reset()
+    SessionCache.reset()
     def side = spark.range(0, 100).select(col("id").as("k"))
     def fact = spark.range(0, 1000).select(col("id").as("fk"))
     RuntimeFilters.keyFilter(fact, "fk", side, "k", 100L).count()
-    assert(RuntimeFilters.cachedCount === 1)
+    assert(SessionCache.count(SessionCache.Sketches) === 1)
     RuntimeFilters.keyFilter(fact, "fk", side, "k", 100L).count()
-    assert(RuntimeFilters.cachedCount === 1, "same plan rebuilt the sketch")
-    RuntimeFilters.reset()
-    assert(RuntimeFilters.cachedCount === 0)
+    assert(SessionCache.count(SessionCache.Sketches) === 1,
+      "same plan rebuilt the sketch")
+    SessionCache.reset()
+    assert(SessionCache.count(SessionCache.Sketches) === 0)
   }
 
   test("past the key budget the filter is SKIPPED, not saturated") {
-    RuntimeFilters.reset()
+    SessionCache.reset()
     val side = spark.range(0, 10).select(col("id").as("k"))
     val fact = spark.range(0, 100).select(col("id").as("fk"))
     val out = RuntimeFilters.keyFilter(fact, "fk", side, "k",
       RuntimeFilters.MaxKeys + 1)
     assert(out eq fact, "over-budget side must return the fact unchanged")
-    assert(RuntimeFilters.cachedCount === 0)
+    assert(SessionCache.count(SessionCache.Sketches) === 0)
     // empty side: nothing to filter against — fact unchanged, join
     // yields zero rows anyway
     assert(RuntimeFilters.keyFilter(fact, "fk", side.limit(0), "k", 0L)
       eq fact)
-    RuntimeFilters.reset()
+    SessionCache.reset()
   }
 
   test("shuffleGuard arms ONLY past the broadcast gate: bare pass-through " +
       "when the side broadcasts, might_contain on the fact when it " +
       "shuffles — same rows either way") {
-    Broadcasts.reset()
-    RuntimeFilters.reset()
+    SessionCache.reset()
     val side = spark.range(0, 20000).filter(col("id") % 5 === 0)
       .select(col("id").as("k"), (col("id") % 7).as("tag"))
     val fact = spark.range(0, 20000)
@@ -105,13 +105,12 @@ class RuntimeFiltersSpec extends SparkSpec {
     val want = fact.join(side, col("fk") === col("k"))
       .select("fk", "v", "tag").collect().map(_.toSeq).toSet
     assert(got === want, "guarded shuffle join diverged from bare")
-    Broadcasts.reset()
-    RuntimeFilters.reset()
+    SessionCache.reset()
   }
 
   test("immutable-side contract: a side whose files are rewritten " +
       "in-session serves the OLD sketch until reset()") {
-    RuntimeFilters.reset()
+    SessionCache.reset()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bloom-stale").toString
     spark.range(0, 100).select(col("id").as("k"))
@@ -128,7 +127,7 @@ class RuntimeFiltersSpec extends SparkSpec {
     spark.catalog.refreshByPath(dir)
     assert(kept() === fresh,
       "rewritten side escaped the sketch cache without reset()")
-    RuntimeFilters.reset()
+    SessionCache.reset()
     // rebuilt sketch: Bloom has no false negatives — all 200 pass
     assert(kept() === 200L, "reset() did not invalidate the stale sketch")
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Broadcasts, TopKJoin}
+import graft.operators.{SessionCache, TopKJoin}
 
 /** Adaptive-refill top-k pushdown: one probe when the catalog-clean
   * constraints hold, correct-by-escalation when they don't — duplicate
@@ -37,7 +37,7 @@ class TopKJoinSpec extends SparkSpec {
     (1L to 200L).map(i => (java.lang.Long.valueOf(i), i * 7 % 101))
 
   test("clean layout: one probe, and the limit sits below the join") {
-    Broadcasts.reset()
+    SessionCache.reset()
     val f = fact(cleanFact); val d = dim(cleanDim)
     val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(pushed(f, d, 10) == oracle(f, d, 10))
@@ -52,7 +52,7 @@ class TopKJoinSpec extends SparkSpec {
   }
 
   test("duplicate dim key: extra multiplicity stays correct without demotion") {
-    Broadcasts.reset()
+    SessionCache.reset()
     val f = fact(cleanFact)
     val d = dim(cleanDim :+ ((5L, "dup"))) // key 5 twice
     assert(pushed(f, d, 10) == oracle(f, d, 10))
@@ -61,7 +61,7 @@ class TopKJoinSpec extends SparkSpec {
   }
 
   test("orphaned fact key: refill escalates and matches the plain plan") {
-    Broadcasts.reset()
+    SessionCache.reset()
     // fact key 999 has no dim row and tops the sort; the first probe
     // returns k-1 rows, so the loop must escalate, not under-fill
     val f = fact(cleanFact :+ ((java.lang.Long.valueOf(999L), 1000L)))
@@ -70,14 +70,14 @@ class TopKJoinSpec extends SparkSpec {
   }
 
   test("NULL fact key: never equi-joins, refill covers the dropped row") {
-    Broadcasts.reset()
+    SessionCache.reset()
     val f = fact(cleanFact :+ ((null: java.lang.Long, 1000L)))
     val d = dim(cleanDim)
     assert(pushed(f, d, 10) == oracle(f, d, 10))
   }
 
   test("fact exhausted below k: returns every matching row, no infinite loop") {
-    Broadcasts.reset()
+    SessionCache.reset()
     // only 3 fact rows, one orphaned; k = 10 can never fill
     val f = fact(Seq((java.lang.Long.valueOf(1L), 30L),
       (java.lang.Long.valueOf(2L), 20L), (java.lang.Long.valueOf(999L), 10L)))
@@ -87,7 +87,7 @@ class TopKJoinSpec extends SparkSpec {
   }
 
   test("orphan flood: many misses still converge to the oracle") {
-    Broadcasts.reset()
+    SessionCache.reset()
     // 400 orphans outscore every matched row: the k=5 probe must
     // escalate past them (5 -> 40 -> 320 -> 2560 covers all 600 rows)
     val orphans = (1L to 400L).map(i =>

@@ -15,10 +15,12 @@ single command so there is no excuse to skip it.
 2. registry reachability — every graft.queries.*Ops object defining
    `all: Seq[Q]` must be referenced from SparkEntry.scala (round 9 also
    shipped SelectionOps unregistered → dead code, never gated)
-3. with query names: run graft.Verify on exactly those rows @ sf0.01 and
+3. single session cache — no src/main file but SessionCache declares a
+   map keyed on a SparkSession or LogicalPlan
+4. with query names: run graft.Verify on exactly those rows @ sf0.01 and
    tools/check.py on the dump (the driver-gate stand-in for the rows you
    just touched)
-4. staleness report — README's counts-block HEAD vs the current HEAD, so
+5. staleness report — README's counts-block HEAD vs the current HEAD, so
    a post-snapshot commit visibly admits its artifacts are stale
 
 Exit code is non-zero on any red step; the staleness report is a warning
@@ -61,6 +63,43 @@ def check_registry_reachability():
     print("[precommit] registry reachability ok", flush=True)
 
 
+def _map_key_types(text):
+    """The key-type argument of every `...Map[K, V]` in Scala source
+    `text` (comments stripped), with its line number."""
+    code = re.sub(r"/\*.*?\*/", lambda m: "\n" * m.group().count("\n"),
+                  text, flags=re.S)
+    code = re.sub(r"//[^\n]*", "", code)
+    for m in re.finditer(r"\b\w*Map\[", code):
+        depth, i, key = 1, m.end(), None
+        while i < len(code) and depth:
+            c = code[i]
+            if c in "[(":
+                depth += 1
+            elif c in "])":
+                depth -= 1
+            elif c == "," and depth == 1 and key is None:
+                key = code[m.end():i]
+            i += 1
+        yield code.count("\n", 0, m.start()) + 1, key or code[m.end():i - 1]
+
+
+def check_single_session_cache(root=REPO):
+    """Session-scoped caching lives in graft.operators.SessionCache only:
+    no other src/main file may declare a map keyed on a SparkSession or a
+    LogicalPlan (it would escape SessionCache.reset() and its bounds)."""
+    found = []
+    for f in sorted((root / "src/main").rglob("*.scala")):
+        if f.name == "SessionCache.scala":
+            continue
+        for line, key in _map_key_types(f.read_text()):
+            if re.search(r"\b(SparkSession|LogicalPlan)\b", key):
+                found.append(f"{f.relative_to(root)}:{line}")
+    if found:
+        raise SystemExit("[precommit] RED — session/plan-keyed maps outside "
+                         f"SessionCache: {found}")
+    print("[precommit] single session cache ok", flush=True)
+
+
 def staleness_report():
     head = subprocess.run(["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
                           capture_output=True, text=True).stdout.strip()
@@ -77,6 +116,7 @@ def main():
     names = sys.argv[1:]
     run("sbt compile", ["sbt", "-batch", "compile", "Test/compile"])
     check_registry_reachability()
+    check_single_session_cache()
     if names:
         subprocess.run(["rm", "-rf", OUT], check=True)
         run(f"verify {len(names)} touched rows @ sf0.01",
